@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from smartreader_spark.functions.textqa import _norm
+from smartreader_spark.pipeline.memo import memo
 
 # the end-of-word sentinel of the original algorithm: lets the model
 # distinguish word-final subwords ("est</w>") from word-internal ones
@@ -115,31 +116,24 @@ def _apply_merge(seg, lhs: str, rhs: str):
     )
 
 
-#: memoized training per (application, corpus, knobs) — the training
-#: pass is a driver loop of k small jobs, so the merge table and the
-#: final (localCheckpoint-ed, hence plan-free) segmentation are reused
-#: when `bpe_fertility` runs after `bpe_train` in the same session (the
-#: training._STAGES_CACHE precedent). Keyed by applicationId, never
-#: id(); entries from dead applications are evicted on access.
-_TRAIN_CACHE: dict[tuple, tuple] = {}
-
-
 def _train(
     spark: SparkSession,
     sf_dir: str,
     num_merges: int = NUM_MERGES,
     min_pair_count: int = MIN_PAIR_COUNT,
 ) -> tuple[list[tuple[int, str, str, int]], DataFrame]:
-    """Run the merge-learning loop; returns (merge table rows, the final
-    per-word segmentation DataFrame (word, cnt, seg))."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir, num_merges, min_pair_count)
-    cached = _TRAIN_CACHE.get(key)
-    if cached is not None:
-        return cached
-    for stale in [k for k in _TRAIN_CACHE if k[0] != app_id]:
-        del _TRAIN_CACHE[stale]
+    """(merge table rows, the final per-word segmentation DataFrame
+    (word, cnt, seg)), trained once per session memo key."""
+    return memo(
+        spark, "bpe.train", (sf_dir, num_merges, min_pair_count),
+        lambda: _run_merges(spark, sf_dir, num_merges, min_pair_count),
+    )
 
+
+def _run_merges(
+    spark: SparkSession, sf_dir: str, num_merges: int, min_pair_count: int
+) -> tuple[list[tuple[int, str, str, int]], DataFrame]:
+    """Run the merge-learning loop."""
     words = _word_vocab(spark, sf_dir).select(
         "word",
         "cnt",
@@ -165,8 +159,6 @@ def _train(
             "cnt",
             _apply_merge(F.col("seg"), best["lhs"], best["rhs"]).alias("seg"),
         ).localCheckpoint(eager=True)
-
-    _TRAIN_CACHE[key] = (merges, words)
     return merges, words
 
 

@@ -50,8 +50,8 @@ from smartreader_spark.functions.dedup import (
 MAX_ITER = 25
 
 # instrumentation: rounds the last connected_components call needed to
-# converge (read by tools/scale_step_components.py — the scale claim is
-# that this stays O(log n) while the input grows)
+# converge (read by `tools/scale_step.py --op components` — the scale
+# claim is that this stays O(log n) while the input grows)
 LAST_ROUNDS = 0
 
 
@@ -147,8 +147,8 @@ def dedup_components(spark: SparkSession, sf_dir: str,
     included): (doc_id, component, is_canonical). A downstream dedup
     keeps `is_canonical` rows — exactly one survivor per near-dup
     family, chains and all."""
-    # r7: the pair graph comes from the session-shared miner memo
-    # (identical to dedup_simhash_pairs' output — see _PAIRS_CACHE)
+    # the pair graph comes from the session memo "dedup.simhash_pairs"
+    # (identical to dedup_simhash_pairs' output; pipeline/memo.py)
     docs = _load_documents(spark, sf_dir).select("doc_id")
     pairs = _sf_simhash_pairs(spark, sf_dir, max_hamming=max_hamming).select(
         "doc_a", "doc_b"

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..pipeline.memo import memo
+
 NGRAM_N = 3
 #: b×r LSH banding (VERDICT r5 #3): 8 bands of r=4 concatenated
 #: min-hashes. Candidate probability 1-(1-s⁴)⁸ keeps ~0.99 recall at
@@ -461,35 +463,19 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str,
 
 SIMHASH_MAX_BUCKET = 1000
 
-#: (applicationId, sf_dir, max_hamming, max_bucket_size) → the
-#: localCheckpointed simhash near-dup pair table. dedup_simhash_pairs,
-#: dedup_components and dedup_family_keep_best all mine the IDENTICAL
-#: pair graph from the same raw table in one session — the
-#: _GATES_CACHE / _STAGES_CACHE memoization precedent applied to the
-#: pair miner (r7): first consumer pays the banded self-join, the
-#: component queries reuse the materialized pairs. Session-keyed,
-#: evicted per key change; checkpoint blocks are GC-freed with the
-#: DataFrames.
-_PAIRS_CACHE: dict = {}
-
-
 def _sf_simhash_pairs(spark: SparkSession, sf_dir: str,
                       max_hamming: int = 3,
                       max_bucket_size: int | None = SIMHASH_MAX_BUCKET) -> DataFrame:
-    key = (
-        spark.sparkContext.applicationId, sf_dir, max_hamming, max_bucket_size
+    """The localCheckpointed pair table, built once per session memo key."""
+    def build():
+        docs = _spread_docs(_load_documents(spark, sf_dir).select("doc_id", "text"))
+        return simhash_pairs_for_docs(
+            docs, max_hamming=max_hamming, max_bucket_size=max_bucket_size
+        ).localCheckpoint(eager=True)
+
+    return memo(
+        spark, "dedup.simhash_pairs", (sf_dir, max_hamming, max_bucket_size), build
     )
-    cached = _PAIRS_CACHE.get(key)
-    if cached is not None:
-        return cached
-    docs = _spread_docs(_load_documents(spark, sf_dir).select("doc_id", "text"))
-    pairs = simhash_pairs_for_docs(
-        docs, max_hamming=max_hamming, max_bucket_size=max_bucket_size
-    ).localCheckpoint(eager=True)
-    for k in [k for k in _PAIRS_CACHE if k[0] == key[0] and k != key]:
-        _PAIRS_CACHE.pop(k)
-    _PAIRS_CACHE[key] = pairs
-    return pairs
 
 
 def simhash_near_dup_pairs(spark: SparkSession, sf_dir: str,
@@ -615,7 +601,10 @@ def _simhash_wide(spark: SparkSession, sf_dir: str, n_bits: int = 60) -> DataFra
 def simhash_wide_signatures(docs: DataFrame, n_bits: int = 60) -> DataFrame:
     """n-bit SimHash per document (same construction as
     simhash_signatures, wider hash prefix: ceil(n/4) md5 hex chars).
-    `docs` needs (doc_id, text)."""
+    `docs` needs (doc_id, text). `n_bits` ≤ 60: 16 hex chars overflow a
+    signed BIGINT for half the tokens (ANSI casts fail the task)."""
+    if not 1 <= n_bits <= 60:
+        raise ValueError(f"n_bits must be in 1..60, got {n_bits}")
     n_hex = (n_bits + 3) // 4
     toks = docs.select(
         "doc_id", F.explode(F.array_distinct(_tokens(F.col("text")))).alias("tok")

@@ -103,6 +103,12 @@ def _dlit_sql(v) -> str:
     return f"CAST('{float(v)!r}' AS DOUBLE)"
 
 
+def _slit_sql(s: str) -> str:
+    """One string literal for F.expr: Spark SQL reads backslash escapes
+    inside quotes, so backslash and quote are escaped."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def _lit_vec_sql(vals) -> str:
     return "array(" + ", ".join(_dlit_sql(v) for v in vals) + ")"
 

@@ -45,9 +45,11 @@ from ..functions.dedup import (
     oversized_buckets_for_docs,
     simhash_pairs_for_docs,
 )
+from ..functions.similarity import _slit_sql
 from ..functions.textqa import STOPWORDS
 from .corpus import wrap_plain_documents
 from .extract import extract_articles
+from .memo import memo
 from .pdf_ingest import pdf_to_span_table
 
 #: paragraph joiner between a document's text spans (mirrored by
@@ -154,6 +156,23 @@ def unified_doc_table(spark: SparkSession, sf_dir: str,
     return html.unionByName(pdf).filter(F.length("text") > 0)
 
 
+def _stopword_best_sql(stopwords: dict[str, list[str]]) -> str:
+    """SQL for the winning language's (hits, lang) struct over `_toks`."""
+    def hits(words):
+        # one-arg lambda (PySpark treats a 2-arg lambda as element+index)
+        arr = "array(" + ",".join(_slit_sql(w) for w in words) + ")"
+        return f"size(filter(_toks, t -> array_contains({arr}, t)))"
+
+    return (
+        "array_max(array("
+        + ",".join(
+            f"struct({hits(words)} AS hits, {_slit_sql(lang)} AS lang)"
+            for lang, words in stopwords.items()
+        )
+        + "))"
+    )
+
+
 def quality_token_stage(uniq: DataFrame) -> DataFrame:
     """Stage 3 — language-aware quality gate + token counts over a
     (…, text) table. Pure projections (codegen, no shuffle).
@@ -179,19 +198,7 @@ def quality_token_stage(uniq: DataFrame) -> DataFrame:
     # fresh session). Same expressions — size(filter(...)) over a
     # stopword array literal per language, argmax by (hits, lang) via
     # array_max over structs — so results are identical.
-    def _hits_sql(words):
-        # one-arg lambda (PySpark treats a 2-arg lambda as element+index)
-        arr = "array(" + ",".join(f"'{w}'" for w in words) + ")"
-        return f"size(filter(_toks, t -> array_contains({arr}, t)))"
-
-    best = F.expr(
-        "array_max(array("
-        + ",".join(
-            f"struct({_hits_sql(words)} AS hits, '{lang}' AS lang)"
-            for lang, words in STOPWORDS.items()
-        )
-        + "))"
-    )
+    best = F.expr(_stopword_best_sql(STOPWORDS))
     stop_hits = best["hits"]
     punct = F.length(
         F.regexp_replace(F.col("text"), "[^" + PUNCT_CHARS + "]", "")
@@ -222,65 +229,24 @@ def quality_token_stage(uniq: DataFrame) -> DataFrame:
     )
 
 
-#: one composed-stage build per (session, sf_dir, knobs) — the gate runs
-#: pipeline_end_to_end AND pipeline_funnel in one session; without this
-#: the second query would pay the extraction + cache build again
-#: (VERDICT r4 "What's wrong" #3)
-_STAGES_CACHE: dict[tuple, dict] = {}
-
-#: DataFrame pdf_source identity tokens (ADVICE r5: id() can be reused by
-#: a NEW DataFrame after the original is garbage-collected, silently
-#: serving stale cached stages; a WeakKeyDictionary entry dies with its
-#: DataFrame, so every distinct object gets a distinct monotonic token)
-_PDF_SOURCE_TOKENS: "weakref.WeakKeyDictionary" = None  # type: ignore[assignment]
-_PDF_SOURCE_SEQ = 0
-
-
-def _pdf_source_token(pdf_source) -> "str | None | int":
-    if isinstance(pdf_source, (str, type(None))):
-        return pdf_source
-    global _PDF_SOURCE_TOKENS, _PDF_SOURCE_SEQ
-    if _PDF_SOURCE_TOKENS is None:
-        import weakref
-
-        _PDF_SOURCE_TOKENS = weakref.WeakKeyDictionary()
-    tok = _PDF_SOURCE_TOKENS.get(pdf_source)
-    if tok is None:
-        _PDF_SOURCE_SEQ += 1
-        tok = _PDF_SOURCE_SEQ
-        _PDF_SOURCE_TOKENS[pdf_source] = tok
-    return tok
-
-
-def _evict_stages(app_id: str, keep_key: tuple) -> None:
-    """Cap the cache at one live entry per session: unpersist and drop
-    every other entry for `app_id` (ADVICE r5: memoized entries held
-    .cache()d DataFrames forever — unbounded growth across sf_dirs)."""
-    for k in [k for k in _STAGES_CACHE if k[0] == app_id and k != keep_key]:
-        stages = _STAGES_CACHE.pop(k)
-        for df in stages.values():
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-
-
 def _stages(spark: SparkSession, sf_dir: str,
             max_hamming: int = 3,
             pdf_source: "DataFrame | str | None" = None,
             pdf_partitions: int | None = None) -> dict[str, DataFrame]:
-    """Build every stage DataFrame once; `pipeline_end_to_end` returns
-    the survivors, `pipeline_funnel` the per-stage lineage counts."""
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        max_hamming,
-        _pdf_source_token(pdf_source),
-        pdf_partitions,
+    """Every stage DataFrame, built once per session memo key (the gate
+    runs pipeline_end_to_end AND pipeline_funnel in one session);
+    `pipeline_end_to_end` returns the survivors, `pipeline_funnel` the
+    per-stage lineage counts."""
+    return memo(
+        spark, "training.stages",
+        (sf_dir, max_hamming, pdf_source, pdf_partitions),
+        lambda: _build_stages(spark, sf_dir, max_hamming, pdf_source, pdf_partitions),
     )
-    cached = _STAGES_CACHE.get(key)
-    if cached is not None:
-        return cached
+
+
+def _build_stages(spark: SparkSession, sf_dir: str, max_hamming: int,
+                  pdf_source: "DataFrame | str | None",
+                  pdf_partitions: int | None) -> dict[str, DataFrame]:
     docs = unified_doc_table(
         spark, sf_dir, pdf_source=pdf_source, pdf_partitions=pdf_partitions
     ).cache()  # ONE extraction pass;
@@ -322,7 +288,7 @@ def _stages(spark: SparkSession, sf_dir: str,
         max_bucket_size=SIMHASH_MAX_BUCKET,
         banded=banded,
     )
-    result = {
+    return {
         "docs": docs,
         "kept": kept,
         "banded": banded,
@@ -331,9 +297,6 @@ def _stages(spark: SparkSession, sf_dir: str,
         "final": final,
         "dropped_buckets": dropped,
     }
-    _STAGES_CACHE[key] = result
-    _evict_stages(key[0], key)
-    return result
 
 
 def training_pipeline(spark: SparkSession, sf_dir: str,

@@ -84,6 +84,21 @@ def test_simhash_stable_and_bounded(spark):
     assert all(0 <= r.simhash < 2 ** 16 for r in sims)
 
 
+def test_simhash_wide_width_bounds(spark):
+    """A 16-hex-char md5 prefix (n_bits >= 61) overflows a signed BIGINT
+    under ANSI casts for half of all tokens, so widths outside 1..60 are
+    refused up front; 60 bits stays the widest working signature."""
+    from smartreader_spark.functions.dedup import simhash_wide_signatures
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
+    for n_bits in (0, 61):
+        with pytest.raises(ValueError):
+            simhash_wide_signatures(docs, n_bits=n_bits)
+    sigs = simhash_wide_signatures(docs, n_bits=60).collect()
+    assert len(sigs) == 500
+    assert all(0 <= r.simhash < 2 ** 60 for r in sigs)
+
+
 def test_ann_brute_force_topk(spark):
     from smartreader_spark.functions.similarity import brute_force_topk
 

@@ -97,6 +97,37 @@ def test_quality_stage_cjk_punctuation(spark):
     assert rows["cjk-clean"].stopword_ratio == 0.0
 
 
+def test_stopword_sql_escapes_literals(spark):
+    """The per-language hit counters are one SQL string: today's lexicon
+    (no quote, no backslash) yields the same bytes as plain quoting, and
+    words or codes holding ' or \\ count exactly as in Python."""
+    from smartreader_spark.functions.textqa import STOPWORDS
+    from smartreader_spark.pipeline.training import _stopword_best_sql
+
+    def plain_quoted(stopwords):
+        def hits(words):
+            arr = "array(" + ",".join(f"'{w}'" for w in words) + ")"
+            return f"size(filter(_toks, t -> array_contains({arr}, t)))"
+
+        return "array_max(array(" + ",".join(
+            f"struct({hits(words)} AS hits, '{lang}' AS lang)"
+            for lang, words in stopwords.items()
+        ) + "))"
+
+    assert _stopword_best_sql(STOPWORDS) == plain_quoted(STOPWORDS)
+
+    words = ["l'", "a\\b", "\\", "it's", "plain"]
+    toks = ["l'", "a\\b", "\\", "x", "it's", "l'", "plain", "'", "ab"]
+    best = (
+        spark.createDataFrame([(toks,)], "_toks array<string>")
+        .select(F.expr(_stopword_best_sql({"x'\\": words})).alias("b"))
+        .first()
+        .b
+    )
+    assert best.hits == sum(t in words for t in toks) == 6
+    assert best.lang == "x'\\"
+
+
 def test_unified_doc_table_pdf_source_injection(spark, tmp_path):
     """The composed job's PDF leg accepts an external corpus — as a
     DataFrame and as a parquet path (tools/submit_pipeline --pdf-source);
